@@ -24,8 +24,8 @@ object SparkEntry {
     TextAnalysis.invertedIndex(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")).orderBy("word")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2, built once. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -586,7 +586,9 @@ object CurationQueries {
             (lit(4L) * col("m2") * col("sjk") - col("sjpk") * col("sjpk")).as("num"),
             (lit(2L) * col("m2") * col("sj2k2") - col("sjpk") * col("sjpk")).as("den"))
           .select(col("m2"), col("num"), col("den"),
-            round(col("num").cast("double") / col("den"), 4).as("assortativity"))
+            // den = 0 when every degree is equal (all dup pairs disjoint):
+            // NULL, as DuckDB's division gives, where ANSI `/` would throw
+            round(try_divide(col("num").cast("double"), col("den")), 4).as("assortativity"))
       },
       Some(s"""WITH ${PipelineQueries.jaccardCtes},
              |prs AS (SELECT a_id, b_id FROM inter

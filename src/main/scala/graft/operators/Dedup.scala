@@ -137,34 +137,6 @@ object Dedup {
   private[graft] def release(df: DataFrame): Unit =
     if (df != null) df.unpersist(blocking = false)
 
-  /** [[materialize]] of a LOOP-INVARIANT frame hash-partitioned on `keys`,
-    * with AQE disabled around the eager materialization so the captured
-    * layout is VISIBLE to the planner. `Dataset.localCheckpoint` copies the
-    * physical plan's outputPartitioning onto the checkpointed LogicalRDD —
-    * but under AQE the adaptive plan's partitioning is still undecided at
-    * capture time, so it stores UnknownPartitioning(0) and every downstream
-    * join re-exchanges the frame (the r14 co-partitioning experiment's
-    * measured gotcha: staging repartition+sort was pure added cost because
-    * the planner could not see it). With AQE off for just this staging job,
-    * the LogicalRDD records HashPartitioning(keys, shuffle.partitions) and
-    * an iterative consumer joining or aggregating on `keys` plans
-    * exchange-free against it round after round — the "co-partition edges
-    * and ranks once" cluster posture the PageRank/HITS scaladocs promise.
-    * AQE is restored immediately; only the one staging action runs
-    * non-adaptively (its plan is a single repartition — nothing for AQE to
-    * re-optimize anyway). Under the `persist` strategy the partitioning is
-    * naturally visible (InMemoryRelation keeps the child's partitioning),
-    * and the AQE toggle is harmless.
-    */
-  private[graft] def materializeHash(df: DataFrame, keys: String*): DataFrame = {
-    val conf = df.sparkSession.conf
-    val aqe = "spark.sql.adaptive.enabled"
-    val prev = conf.get(aqe, "true")
-    conf.set(aqe, "false")
-    try materialize(df.repartition(keys.map(col): _*))
-    finally conf.set(aqe, prev)
-  }
-
   /** Shingle-sharing skew profile: (docs_per_shingle, n_shingles) — the
     * distribution that SIZES every shingle pair join (cost Σ f² over these
     * levels). A fat tail is the signal to lean on AQE skew-split / LSH

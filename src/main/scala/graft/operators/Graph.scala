@@ -51,8 +51,9 @@ object Graph {
     // per-round shuffle count (the cluster analogue is the pre-partitioned
     // adjacency-with-degree table every production PageRank keys on).
     // NOTE r15 negative result (guide §2.4 gotcha, second attempt): a
-    // planner-visible hash(src)/hash(id) checkpoint layout (materializeHash,
-    // AQE-off capture) was implemented and measured WORSE across the family
+    // planner-visible hash(src)/hash(id) checkpoint layout (a repartition
+    // on the key, checkpointed with AQE off so the relation keeps its hash
+    // partitioning) was implemented and measured WORSE across the family
     // (gr_pagerank 1.74 -> 3.38 s solo, _weighted 1.89 -> 5.13, gr_ppr
     // 1.76 -> 3.08, _weighted 2.05 -> 5.39): at bench scale the rank vector
     // is broadcast-joined anyway (no adjacency re-exchange to remove), and
@@ -1189,13 +1190,13 @@ object Graph {
   def hits(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"bad hits iters $iters")
     // NOTE r15 negative result: planner-visible hash(src)/hash(dst)
-    // checkpoint layouts of the adjacency (one per orientation,
-    // materializeHash) measured WORSE (gr_hits 1.77 -> 2.9 s solo) for the
-    // same reason as pageRank's — a fixed-partitioning leaf disables AQE's
-    // tiny-shuffle coalescing, so every half-round ran 32-task
-    // micro-stages. Plain stats-carrying checkpoint + AQE stands; the
-    // A/Aᵀ co-partitioned layout remains the documented posture for
-    // clusters whose partitions carry real data.
+    // checkpoint layouts of the adjacency (one per orientation, each
+    // checkpointed with AQE off as in pageRank's note) measured WORSE
+    // (gr_hits 1.77 -> 2.9 s solo) for the same reason as pageRank's — a
+    // fixed-partitioning leaf disables AQE's tiny-shuffle coalescing, so
+    // every half-round ran 32-task micro-stages. Plain stats-carrying
+    // checkpoint + AQE stands; the A/Aᵀ co-partitioned layout remains the
+    // documented posture for clusters whose partitions carry real data.
     val e = Dedup.materialize(edges.select(col("src"), col("dst")).distinct())
     val nodes = Dedup.materialize(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())

@@ -1,16 +1,29 @@
 package graft.sources
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Reference-parity text source/sink.
   *
   * Source: the reference reads local text files line-by-line and feeds map
   * functions (file, contents) records (/root/reference/master.py:25-38,
-  * mapper_node.py:81-82). `readLines` is the line-level scan
-  * (`spark.read.text` + `input_file_name()`); `readDocuments` is the
-  * (file, contents) record shape via `wholeTextFiles` (file-at-a-time is
-  * genuinely imperative per-file I/O — one of the rare justified RDD uses).
+  * mapper_node.py:81-82). Both readers are Spark's text file source with
+  * `input_file_name()` as `file`:
+  *   - `readLines` is the line-level scan;
+  *   - `readDocuments` is the (file, contents) record shape, the same scan
+  *     with `wholetext` on (one row per file, never split).
+  *
+  * The file list is taken once, when the relation resolves
+  * (`InMemoryFileIndex`); no per-job input-split computation runs. Files are
+  * packed into read partitions by `spark.sql.files.maxPartitionBytes` /
+  * `openCostInBytes` / `minPartitionNum`, which spreads a directory of small
+  * files over about `defaultParallelism` tasks, so the map phase of every
+  * job that reads documents runs on all cores.
+  *
+  * `file` is the scan's URL-encoded path URI (`file:///dir/name.txt` for a
+  * local file), the same string for both readers.
   *
   * Sink: the reference writes `key\tvalue` lines into one consolidated text
   * file (/root/reference/reducer_node.py:25-26, master.py:166-173).
@@ -23,11 +36,31 @@ object TextSource {
       .select(input_file_name().as("file"), col("line"))
 
   /** (file, text) whole-document records — the reference map fn's input
-    * contract (doc_id, contents).
+    * contract (doc_id, contents): one row per non-hidden file, the bytes
+    * decoded as UTF-8 with a BOM kept as `\uFEFF`.
+    *
+    * The file source reads no row from a zero-length file, but the
+    * reference frames an empty file as a document of its own
+    * (master.py:37, `#\r#path#\r#`). Those files come from the index the
+    * scan already listed, with no second listing and no job, and are
+    * unioned in as `(file, "")` rows only when there are any, so the plan
+    * of a corpus without empty files is the plain scan.
     */
   def readDocuments(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext.wholeTextFiles(path).toDF("file", "text")
+    val scan = spark.read.option("wholetext", "true").text(path)
+    val docs = scan.select(input_file_name().as("file"), col("value").as("text"))
+    val listed = scan.queryExecution.analyzed match {
+      case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        i.allFiles()
+    }
+    // the same URI string input_file_name() yields for a scanned file
+    val empty = listed.filter(_.getLen == 0)
+      .map(f => (SparkPath.fromPath(f.getPath).urlEncoded, ""))
+    if (empty.isEmpty) docs
+    else {
+      import spark.implicits._
+      docs.union(empty.toDF("file", "text"))
+    }
   }
 
   /** Tab-separated text sink (`k\tv...` lines). `singleFile` coalesces to

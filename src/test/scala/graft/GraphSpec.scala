@@ -874,4 +874,21 @@ class GraphSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("gr_assortativity is NULL, not an error, when every dup pair is disjoint") {
+    // two disjoint identical-text pairs and a singleton: every degree is 1,
+    // so num = den = 0; the DuckDB oracle gives m2 = 4 (2 pairs, both
+    // directions), num = 0, den = 0 and a NULL ratio
+    val dir = java.nio.file.Files.createTempDirectory("assort").toString
+    val texts = Seq("alpha beta gamma delta epsilon", "alpha beta gamma delta epsilon",
+      "one two three four five", "one two three four five", "red green blue cyan")
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "test", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("gr_assortativity")(spark, dir).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((4L, 0L, 0L)), r)
+    assert(r.isNullAt(3), r)
+  }
 }

@@ -2,9 +2,11 @@ package graft
 
 import graft.operators.Multimodal
 import graft.sources.TextSource
+import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 class SourcesAndMultimodalSpec extends AnyFunSuite {
@@ -26,6 +28,38 @@ class SourcesAndMultimodalSpec extends AnyFunSuite {
     val texts = df.as[(String, String)].collect().toMap
     assert(texts.keys.forall(_.endsWith(".txt")))
     assert(texts.values.exists(_.contains("universally acknowledged")))
+  }
+
+  test("readDocuments: one row per non-hidden file, empty included, bytes and file URIs kept") {
+    val dir = Files.createTempDirectory("docs")
+    val files = Map(
+      "bom.txt" -> "\uFEFFcaf\u00e9\tna\u00efve\r\n\u00dcber stra\u00dfe\r\n".getBytes(UTF_8),
+      "ws.txt" -> "  \n\n lead and trail \t\n\n\n  ".getBytes(UTF_8),
+      "empty.txt" -> Array.emptyByteArray)
+    files.foreach { case (n, b) => Files.write(dir.resolve(n), b) }
+    Seq("_x.txt", ".x.txt").foreach(n => Files.writeString(dir.resolve(n), "hidden"))
+
+    val docs = TextSource.readDocuments(spark, dir.toString).as[(String, String)].collect().toSeq
+    def base(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    assert(docs.map(d => base(d._1)).sorted == files.keys.toSeq.sorted, docs)
+    docs.foreach { case (f, text) => assert(text == new String(files(base(f)), UTF_8), f) }
+    assert(docs.exists(_._2.startsWith("\uFEFFcaf")))
+    // readLines has no row for the empty file; every other file string is
+    // the same, and the empty file's row has the same URI form
+    val lineFiles = TextSource.readLines(spark, dir.toString)
+      .select("file").distinct().as[String].collect().toSet
+    assert(docs.map(_._1).filterNot(_.endsWith("/empty.txt")).toSet == lineFiles)
+    assert(docs.map(d => d._1.stripSuffix(base(d._1))).distinct.size == 1, docs)
+  }
+
+  test("readDocuments spreads a directory of files over the session's cores") {
+    val dir = Files.createTempDirectory("docs4")
+    (0 until 4).foreach(i => Files.writeString(dir.resolve(s"d$i.txt"), s"doc $i " * 50))
+    val df = TextSource.readDocuments(spark, dir.toString)
+    val n = df.rdd.getNumPartitions
+    assert(n >= math.min(4, spark.sparkContext.defaultParallelism), n)
+    // no empty file: the plan is the plain scan, no union
+    assert(df.queryExecution.analyzed.collect { case u: Union => u }.isEmpty)
   }
 
   test("writeTsv round-trips tab-separated key-value lines") {
