@@ -50,15 +50,6 @@ object Tables {
     relationCache.getOrElseUpdate((spark, path, "__path__"),
       spark.read.parquet(path))
 
-  /** Normalize events.ts to TimestampType (UTC sessions) regardless of how
-    * the driver generated the parquet: TIMESTAMP(NANOS) arrives as a raw
-    * nanos BIGINT under spark.sql.legacy.parquet.nanosAsLong (`div` is
-    * exact integer division — a double roundtrip would lose precision at
-    * 1e18 nanos); TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
-    * TIMESTAMP_NTZ, whose cast to TimestampType under the UTC session
-    * timezone preserves the wall-clock instant. Downstream operators
-    * (unix_micros, epoch casts, watermarks) all assume TimestampType.
-    */
   /** Spread a DERIVATION-HEAVY scan across the session's default
     * parallelism when the landing under-fills it. The driver testdata
     * tables are single-row-group parquet files, so every scan is ONE
@@ -88,6 +79,15 @@ object Tables {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
+  /** Normalize events.ts to TimestampType (UTC sessions) regardless of how
+    * the driver generated the parquet: TIMESTAMP(NANOS) arrives as a raw
+    * nanos BIGINT under spark.sql.legacy.parquet.nanosAsLong (`div` is
+    * exact integer division — a double roundtrip would lose precision at
+    * 1e18 nanos); TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
+    * TIMESTAMP_NTZ, whose cast to TimestampType under the UTC session
+    * timezone preserves the wall-clock instant. Downstream operators
+    * (unix_micros, epoch casts, watermarks) all assume TimestampType.
+    */
   def normalizeTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
     case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))

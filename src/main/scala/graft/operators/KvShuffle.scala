@@ -56,7 +56,9 @@ object KvShuffle {
     * [[referencePartition]], append to per-reducer keys over real sockets,
     * then one reduce task per key reads, parses, and counts. Returns the
     * (word, cnt) DataFrame — identical to the declarative word count, which
-    * is what the tx_kv_shuffle oracle asserts.
+    * is what the tx_kv_shuffle oracle asserts. Unlike [[MapReduce.wordCount]]
+    * it does not combine in the mapper: the stored runs stay one `w\t1\r,`
+    * record per token so the store holds the reference's bytes.
     */
   def wordCountViaKv(spark: SparkSession, docs: DataFrame, host: String,
                      port: Int, jobId: String, reducers: Int): DataFrame = {

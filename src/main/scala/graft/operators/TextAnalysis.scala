@@ -34,9 +34,13 @@ object TextAnalysis {
   /** (word, doc_list, n_docs) — the reference's inverted index, sorted doc
     * ids for deterministic output (the reference uses an unordered set,
     * SURVEY §2.2). doc_list is a comma-joined string so output hashing is
-    * representation-stable. Scale: collect_set is bounded by docs-per-word;
-    * for web-scale vocab a (word, doc) pair table (no collect) is the
-    * preferred shape — both are exposed.
+    * representation-stable. Each document's tokens are deduplicated before
+    * the explode, so the aggregate sees one row per distinct (word, doc)
+    * pair instead of one per token; collect_set still dedups a doc id that
+    * repeats across rows. Scale: the exploded stream is O(distinct words per
+    * doc) and collect_set is bounded by docs-per-word; for web-scale vocab a
+    * (word, doc) pair table (no collect) is the preferred shape — both are
+    * exposed.
     */
   def invertedIndex(docs: DataFrame, docCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // sort ids numerically only when the source column IS numeric — casting
@@ -48,7 +52,8 @@ object TextAnalysis {
     val docKey =
       if (numericIds) col("doc").cast("bigint") else col("doc")
     docs
-      .select(col(docCol).cast("string").as("doc"), explode(toks(col(textCol))).as("word"))
+      .select(col(docCol).cast("string").as("doc"),
+        explode(array_distinct(toks(col(textCol)))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word")
       // ONE aggregate: n_docs is the size of the same distinct-doc set the

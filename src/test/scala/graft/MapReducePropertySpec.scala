@@ -18,8 +18,12 @@ class MapReducePropertySpec extends AnyFunSuite {
   private val corpusGen = Gen.listOfN(5, docGen)
     .map(_.zipWithIndex.map { case (t, i) => (i.toString, t) })
 
-  private def samples(n: Int): Seq[List[(String, String)]] =
-    (0 until n).flatMap(i => corpusGen.apply(Gen.Parameters.default, rng.Seed(42L + i)))
+  // doc ids drawn from a pool smaller than the corpus, so ids repeat across rows
+  private val repeatedIdCorpusGen = Gen.listOfN(6, Gen.zip(Gen.choose(0, 3), docGen))
+    .map(_.map { case (i, t) => (i.toString, t) })
+
+  private def samples(n: Int, gen: Gen[List[(String, String)]] = corpusGen): Seq[List[(String, String)]] =
+    (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, rng.Seed(42L + i)))
 
   test("facade word count == DataFrame word count on random corpora") {
     samples(5).foreach { corpus =>
@@ -38,6 +42,18 @@ class MapReducePropertySpec extends AnyFunSuite {
         words.foreach(w => assert(idx(w).contains(d)))
         idx.foreach { case (w, ds) => if (ds.contains(d)) assert(words.contains(w)) }
       }
+    }
+  }
+
+  test("facade inverted index == DataFrame inverted index on random corpora") {
+    val repeated = samples(3, repeatedIdCorpusGen)
+    assert(repeated.forall(c => c.map(_._1).distinct.size < c.size))
+    (samples(3) ++ repeated).foreach { corpus =>
+      val facade = MapReduce.invertedIndex(corpus.toDS()).collect()
+        .map { case (w, ds) => w -> (ds.mkString(","), ds.size.toLong) }.toMap
+      val df = TextAnalysis.invertedIndex(corpus.toDF("doc_id", "text"))
+        .as[(String, String, Long)].collect().map { case (w, l, n) => w -> (l, n) }.toMap
+      assert(facade == df)
     }
   }
 

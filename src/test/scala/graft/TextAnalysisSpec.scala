@@ -1,8 +1,14 @@
 package graft
 
 import graft.operators.{MapReduce, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.reflect.{ClassTag, classTag}
 
 /** Reference-semantics golden tests (SURVEY §5.2): word count and inverted
   * index vs independently computed results, on both the DataFrame plans and
@@ -48,6 +54,71 @@ class TextAnalysisSpec extends AnyFunSuite {
     val ds = docs.toDS()
     val got = MapReduce.invertedIndex(ds).collect().toMap
     assert(got.view.mapValues(_.toSet).toMap == expectedIndex)
+  }
+
+  // ---- map-side combining: parity with a serial fold, shuffle traffic ----
+
+  private def serialTokens(text: String): Seq[String] = text.split("\\s+").toSeq.filter(_.nonEmpty)
+
+  private def serialCounts(rows: Seq[(String, String)]): Map[String, Long] =
+    rows.foldLeft(Map.empty[String, Long]) { case (m, (_, t)) =>
+      serialTokens(t).foldLeft(m)((acc, w) => acc.updated(w, acc.getOrElse(w, 0L) + 1L))
+    }
+
+  private def serialPostings[D](rows: Seq[(D, String)]): Map[String, Set[D]] =
+    rows.foldLeft(Map.empty[String, Set[D]]) { case (m, (d, t)) =>
+      serialTokens(t).foldLeft(m)((acc, w) => acc.updated(w, acc.getOrElse(w, Set.empty[D]) + d))
+    }
+
+  // a word repeated many times in one doc, one doc id on two rows, empty and
+  // whitespace-only texts, tabs and \r\n; "d10" < "d2" as strings
+  private val combineCases = Seq(
+    ("d0", Seq.fill(40)("echo").mkString(" ") + " tail echo"),
+    ("d1", "echo a\tb\r\nc  a"),
+    ("d1", "a z z"),
+    ("d2", ""),
+    ("d3", " \t\r\n "),
+    ("d10", "\tz\r\nz tail"))
+
+  test("combined map side: both inverted indexes and the typed word count equal a serial fold") {
+    assert(MapReduce.wordCount(combineCases.toDS()).collect().toMap == serialCounts(combineCases))
+    val postings = serialPostings(combineCases)
+    assert(MapReduce.invertedIndex(combineCases.toDS()).collect().toMap ==
+      postings.map { case (w, ds) => w -> ds.toSeq.sorted })
+    def dfIndex(df: DataFrame) = TextAnalysis.invertedIndex(df)
+      .as[(String, String, Long)].collect().map { case (w, l, n) => w -> (l, n) }.toMap
+    assert(dfIndex(combineCases.toDF("doc_id", "text")) ==
+      postings.map { case (w, ds) => w -> (ds.toSeq.sorted.mkString(","), ds.size.toLong) })
+    // numeric ids sort numerically (2 before 10), also when an id repeats
+    val numeric = Seq((10L, "b a b"), (2L, "a a a"), (2L, "c"), (7L, ""), (1L, "a\tc\r\nc"))
+    assert(dfIndex(numeric.toDF("doc_id", "text")) ==
+      serialPostings(numeric).map { case (w, ds) => w -> (ds.toSeq.sorted.mkString(","), ds.size.toLong) })
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** Sum of one SQL metric over the executed plan's `T` nodes, AQE query
+    * stages included; read after the Dataset ran, so it is the final plan.
+    */
+  private def metricOf[T <: SparkPlan : ClassTag](ds: Dataset[_], metric: String): Long = {
+    val plan = ds.queryExecution.executedPlan
+    val nodes = PlanWalk.collect(plan) { case p: T => p }
+    assert(nodes.nonEmpty, s"no ${classTag[T].runtimeClass.getSimpleName} in\n$plan")
+    nodes.map(_.metrics(metric).value).sum
+  }
+
+  test("combined map side: one shuffled row per distinct (word, doc), not per token") {
+    // unique doc ids, so distinct (word, doc) pairs = sum of distinct words per doc
+    val docs = Seq(("t0", "a a a b a"), ("t1", "b b\tc\r\nc b"), ("t2", "a"), ("t3", " "))
+    val pairs = docs.map { case (_, t) => serialTokens(t).distinct.size.toLong }.sum
+    assert(pairs == 5L && docs.map(d => serialTokens(d._2).size).sum == 11)
+    def ran[D <: Dataset[_]](ds: D): D = { ds.collect(); ds }
+    val records = "shuffleRecordsWritten"
+    val got = (
+      metricOf[ShuffleExchangeExec](ran(MapReduce.invertedIndex(docs.toDS())), records),
+      metricOf[ShuffleExchangeExec](ran(MapReduce.wordCount(docs.toDS())), records),
+      metricOf[GenerateExec](ran(TextAnalysis.invertedIndex(docs.toDF("doc_id", "text"))), "numOutputRows"))
+    assert(got == ((pairs, pairs, pairs)))
   }
 
   test("word count total equals token count (conservation)") {
