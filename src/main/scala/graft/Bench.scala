@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
   /** Execution-proof bench action: a noop-format write evaluates every
     * output row/column, whereas `count()` lets Catalyst collapse the plan to
@@ -9,11 +10,23 @@ object Bench {
   private[graft] def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** The SPARK_GRAFT_CPUS default, shared with [[SoloBands]]: the solo
-    * bands adjudicate in-suite times, so with the env unset BOTH mains
-    * must still build the same-parallelism session — SoloBands previously
-    * defaulted 32 vs this 4, and a band measured at the wrong local[N]
-    * mis-adjudicates a pure parallelism mismatch as suite noise.
+  /** The one timed run of this main and [[SoloBands]]: the query's build
+    * plus its [[run]], in seconds, or the error — a crashing query must not
+    * read as a fast one. The GC before t0 promotes dead broadcast/shuffle
+    * refs of earlier queries for cleanup (best effort: it removed observed
+    * 3-4x inflation late in long runs).
+    */
+  private[graft] def timedRun(query: => DataFrame): Either[Throwable, Double] = {
+    System.gc()
+    val t0 = System.nanoTime()
+    try { run(query); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) => Left(e) }
+  }
+
+  /** The SPARK_GRAFT_CPUS default of every main (this one, [[SoloBands]],
+    * [[Verify]], [[Smoke]], [[Plans]], [[PlanAudit]]): with the env unset
+    * they must still build the same-parallelism session — a band measured
+    * at the wrong local[N] mis-adjudicates a parallelism mismatch as noise.
     */
   private[graft] def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
@@ -26,8 +39,9 @@ object Bench {
     String.format(java.util.Locale.ROOT, pattern,
       args.map(_.asInstanceOf[AnyRef]): _*)
 
-  /** The bench session config, shared with [[SoloBands]] so solo bands are
-    * measured under exactly the in-suite session settings.
+  /** The one session factory of every main and of perfbench, so bands,
+    * plans and correctness run under exactly the benched settings. Callers
+    * set their own log level.
     */
   private[graft] def benchSession(cpus: String): SparkSession =
     SparkSession.builder()
@@ -82,6 +96,32 @@ object Bench {
     "st_session_counts", "dd_incremental_minhash", "gr_closeness_approx",
     "tx_bpe_apply", "gr_ppr")
 
+  /** Off-the-clock staging for the timed sfDir, shared with [[SoloBands]]
+    * so a band measures the same quantity as the in-suite clock. Returns
+    * each step's `_warm:` label and seconds, so the cost stays visible.
+    * The layout views (rel_dpp, rel_join_bucketed) and family caches are
+    * one-time ingest prep; timed in-suite they land on whichever consumer
+    * is alphabetically first and read as phantom regressions. The IO
+    * preamble (one noop scan of every table) runs LAST, since the staging
+    * shuffles churn the page cache, and re-warms the cold-file IO a prior
+    * test suite or verify leaves (+23% uniformly, BASELINE.md r10/r11).
+    */
+  private[graft] def stage(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
+    graft.sources.PartitionedView.eventsByDate(spark, sfDir)
+    graft.sources.BucketedView.ordersLineitem(spark, sfDir)
+    graft.sources.IvfView.embeddingsByLabel(spark, sfDir)
+    val stageWarms =
+      graft.operators.PipelineQueries.stageFamilyCaches(spark, sfDir) ++
+        graft.operators.OpsQueries.stageGramCache(spark, sfDir)
+    val ioT0 = System.nanoTime()
+    graft.Tables.All.foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet")
+        .write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+    stageWarms :+ ("io_preamble" -> (System.nanoTime() - ioT0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = benchSession(envCpus)
@@ -119,52 +159,11 @@ object Bench {
     selected.filter(q => jitHungry(q._1)).foreach { case (_, fn) =>
       try run(fn(spark, "/root/testdata/sf0.01")) catch { case _: Throwable => () }
     }
-    // Ingest staging: the partitioned (rel_dpp) and bucketed
-    // (rel_join_bucketed) storage views model INGEST-TIME layouts — landed
-    // once, queried many times. Stage them for the timed sfDir up front so
-    // those queries measure query latency against the landed layout, not
-    // the one-time write (which the warmup only triggers for warmDir).
-    // Family-cache staging, same rationale: the shared materializations
-    // (MinHash pairs, pair stats, CC labels, SimHash pairs, incremental
-    // verdicts, Gram/power triple) are one-time prep a pipeline lands
-    // before queries run; timed in-suite they land on whichever consumer
-    // is alphabetically first and read as phantom per-query regressions
-    // (r8: three adjudicated). The warm cost stays VISIBLE as labeled
-    // `_warm:` lines (below) rather than inside some query.
     // FULL-INVENTORY RUNS ONLY: a subset debug run (`runMain graft.Bench
     // fn_string`) must not pay minutes of dedup/spectral staging it never
     // uses — every view and cache is get-or-create, so a subset query that
     // does consume one simply stages it inside its own (debug) timing.
-    val warms = if (args.isEmpty) {
-      graft.sources.PartitionedView.eventsByDate(spark, sfDir)
-      graft.sources.BucketedView.ordersLineitem(spark, sfDir)
-      graft.sources.IvfView.embeddingsByLabel(spark, sfDir)
-      // Family-cache staging FIRST, then the IO warm preamble: the heavy
-      // staging shuffles churn the page cache, so a warm scan run before
-      // them would leave the timed queries entering on a different IO
-      // state than SoloBands (which warms AFTER staging) — the very
-      // adjudication the preamble exists to stabilize. Staging before
-      // warming keeps both clocks measuring the same quantity.
-      val stageWarms =
-        graft.operators.PipelineQueries.stageFamilyCaches(spark, sfDir) ++
-          graft.operators.OpsQueries.stageGramCache(spark, sfDir)
-      // IO warm preamble at the TIMED sfDir, off the clock: the r10/r11
-      // cross-context adjudication (BASELINE.md) found the driver's
-      // end-of-round bench lands on a machine whose page cache the full
-      // test suite + two-SF verify just churned, reading uniformly +23%
-      // over a quiet-machine leg on identical plans. One noop-format scan
-      // of every table (full data pages, not parquet-metadata count)
-      // re-warms the cold-file IO so the first timed queries don't carry
-      // it; the cost stays visible as its own `_warm:` line.
-      val ioT0 = System.nanoTime()
-      graft.Tables.All.foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet")
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-      val ioWarm = ("io_preamble", (System.nanoTime() - ioT0) / 1e9)
-      stageWarms :+ ioWarm
-    } else Seq.empty[(String, Double)]
+    val warms = if (args.isEmpty) stage(spark, sfDir) else Seq.empty
     // SPARK_GRAFT_REPEAT=N: time each query N times (tail-latency hunting).
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
     // Per-query history FILE in the repo: the driver's tail capture keeps
@@ -191,27 +190,25 @@ object Bench {
       println(line)
       localLog.foreach { w => w.println(line); w.flush() }
     }
-    val results = selected.flatMap { case (name, fn) =>
+    val outcomes = selected.flatMap { case (name, fn) =>
       (1 to repeat).map(i => (if (repeat == 1) name else s"$name#$i") -> fn)
     }.map { case (name, fn) =>
-      // Best-effort hygiene BEFORE the clock starts: promotes dead
-      // broadcast/shuffle refs from earlier queries for cleanup so this
-      // query neither pays their GC debt nor has the pause land adjacent to
-      // its own t0. Not a guarantee — ContextCleaner drains asynchronously —
-      // but it removed observed 3-4x inflation late in long runs.
-      System.gc()
-      val t0 = System.nanoTime()
-      try { run(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val outcome = timedRun(fn(spark, sfDir))
       // One short JSONL line per query, emitted as it completes: the
       // driver's tail capture truncates the FRONT of long lines, so a
       // single aggregated per-query map loses ~30% of the inventory's
       // history; short individual lines all survive.
-      val line = s"""{"q":"$name","sec":$dt}"""
+      val line = outcome match {
+        case Right(dt) => s"""{"q":"$name","sec":$dt}"""
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          s"""{"q":"$name","status":"error","error":"${e.getClass.getName}"}"""
+      }
       println(line)
       localLog.foreach { w => w.println(line); w.flush() } // crash-safe partials
-      name -> dt
+      name -> outcome
     }
+    val results = outcomes.collect { case (name, Right(dt)) => name -> dt }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
@@ -240,5 +237,7 @@ object Bench {
       w.close()
     }
     spark.stop()
+    // after every artifact is closed: a failed query fails the run
+    if (results.size < outcomes.size) sys.exit(1)
   }
 }

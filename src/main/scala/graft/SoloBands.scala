@@ -14,7 +14,8 @@ package graft
   * {"q","sf","runs",[...],"min","med","max"} — which the round commits as
   * SOLO_BANDS_r<N>.jsonl: an in-suite time exceeding its committed solo
   * band by >30% is suite noise to re-attribute, not a plan regression to
-  * chase.
+  * chase. A query whose timed run fails gets {"q","sf","status":"error",
+  * "error"} instead, and the main exits 1 after every query's line.
   */
 object SoloBands {
   def main(args: Array[String]): Unit = {
@@ -29,36 +30,29 @@ object SoloBands {
     spark.sparkContext.setLogLevel("WARN")
     // identical off-the-clock staging to Bench: solo bands must measure
     // the same quantity as the in-suite clock, minus the suite
-    graft.sources.PartitionedView.eventsByDate(spark, sfDir)
-    graft.sources.BucketedView.ordersLineitem(spark, sfDir)
-    graft.sources.IvfView.embeddingsByLabel(spark, sfDir)
-    graft.operators.PipelineQueries.stageFamilyCaches(spark, sfDir)
-    graft.operators.OpsQueries.stageGramCache(spark, sfDir)
-    // same off-the-clock IO preamble as Bench (page-cache warm of every
-    // timed-sfDir table) — a band must measure the same quantity as the
-    // in-suite clock it adjudicates
-    graft.Tables.All.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    args.foreach { name =>
+    Bench.stage(spark, sfDir)
+    val failed = args.count { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
       try Bench.run(fn(spark, "/root/testdata/sf0.001")) // codegen/JIT warm
       catch { case _: Throwable => () }
-      val runs = (1 to repeat).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try Bench.run(fn(spark, sfDir)) catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
+      val (errors, runs) = (1 to repeat).map(_ => Bench.timedRun(fn(spark, sfDir)))
+        .partitionMap(identity)
+      // a failed repeat voids the band: its time-to-failure is never banded
+      errors.headOption match {
+        case Some(e) =>
+          System.err.println(s"[solo] $name failed: $e")
+          println(s"""{"q":"$name","sf":"$sfDir","status":"error","error":"${e.getClass.getName}"}""")
+        case None =>
+          val s = runs.sorted
+          // Bench.fmt = Locale.ROOT: a comma-decimal default locale would
+          // commit malformed JSON into SOLO_BANDS_r<N>.jsonl
+          def d3(x: Double) = Bench.fmt("%.3f", x)
+          println(s"""{"q":"$name","sf":"$sfDir","runs":[${runs.map(d3).mkString(",")}],"min":${d3(s.head)},"med":${d3(s(s.size / 2))},"max":${d3(s.last)}}""")
       }
-      val s = runs.sorted
-      // Bench.fmt = Locale.ROOT: a comma-decimal default locale would
-      // commit malformed JSON into SOLO_BANDS_r<N>.jsonl
-      def d3(x: Double) = Bench.fmt("%.3f", x)
-      println(s"""{"q":"$name","sf":"$sfDir","runs":[${runs.map(d3).mkString(",")}],"min":${d3(s.head)},"med":${d3(s(s.size / 2))},"max":${d3(s.last)}}""")
+      errors.nonEmpty
     }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -17,8 +17,8 @@ object Tables {
 
   /** Resolved-relation cache — the catalog-table analogue. A bare
     * `spark.read.parquet(path)` eagerly lists the directory and reads
-    * parquet FOOTERS to infer the schema on every call, which the r15
-    * PhaseProbe measured at 0.07–0.17 s of every query's wall time (~a
+    * parquet FOOTERS to infer the schema on every call, which a r15
+    * per-phase probe measured at 0.07–0.17 s of every query's wall time (~a
     * third of the sub-0.5 s tail's fixed floor, paid 392 times per bench).
     * A production warehouse resolves tables through a catalog whose schema
     * and file manifest are metadata, not a per-query footer scan — caching

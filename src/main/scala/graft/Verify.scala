@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Exits 1 if any
+  * query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -12,28 +12,19 @@ object Verify {
     val selected =
       if (names.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => names(n) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See Bench.scala: the inventory outgrows the default 100-entry
-      // codegen cache, and recompiles of the widest classes cost seconds.
-      .config("spark.sql.codegen.cache.maxEntries", "12000")
-      // bucketed-view tables (rel_join_bucketed) go to a JVM-exit-cleaned
-      // temp warehouse, not ./spark-warehouse in the repo
-      .config("spark.sql.warehouse.dir",
-        graft.sources.TempDirs.create("graft_warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the benched session: correctness is checked under the timed config
+    val spark = Bench.benchSession(Bench.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // a failed query is logged and the rest still land; the exit code reports it
+    val failed = selected.count { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        false
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        true
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -53,5 +44,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -27,7 +27,6 @@ object TextAnalysis {
     // stage (see Tables.spread)
     graft.Tables.spread(docs)
       .select(explode(toks(col(textCol))).as("word"))
-      .filter(length(col("word")) > 0)
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
@@ -54,7 +53,6 @@ object TextAnalysis {
     docs
       .select(col(docCol).cast("string").as("doc"),
         explode(array_distinct(toks(col(textCol)))).as("word"))
-      .filter(length(col("word")) > 0)
       .groupBy("word")
       // ONE aggregate: n_docs is the size of the same distinct-doc set the
       // posting list is built from — a separate count_distinct(doc) made
@@ -158,7 +156,6 @@ object TextAnalysis {
   def tfidf(docs: DataFrame): DataFrame = {
     val pairs = docs
       .select(col("doc_id"), explode(toks(col("text"))).as("word"))
-      .filter(length(col("word")) > 0)
     val tf = pairs.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val df = pairs.groupBy("word").agg(count_distinct(col("doc_id")).as("df"))
     val n = docs.select(count(lit(1)).as("n_docs"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer for the engine's custom expressions —
-  * the idiomatic injection point (`SparkSession.builder.withExtensions(new
+  * the idiomatic injection point (a session builder's `withExtensions(new
   * GraftExtensions)` or `spark.sql.extensions=graft.plans.GraftExtensions`),
   * so `float_dot` / `float_cosine` / `rhp_table_keys` resolve in plain SQL
   * text in every session of a cluster, not just after a per-session

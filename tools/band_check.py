@@ -7,8 +7,8 @@ one-command check).
 
 Usage: tools/band_check.py [BENCH_LOCAL jsonl] [SOLO_BANDS jsonl] [PREV jsonl]
        tools/band_check.py --stale-only [...]   # print stale query names
-Exit 1 if any banded query is over; exit 2 if none is over but some band
-is STALE; prints a per-query verdict either way.
+Exit 1 if any banded query is over or any query failed; exit 2 if none
+is over or failed but some band is STALE; prints a per-query verdict either way.
 
 Below the banded set, a SUITE-RELATIVE gate (r11 verdict #2) covers every
 UNBANDED query whose in-suite median exceeds 1s: its time is compared
@@ -48,6 +48,10 @@ tx_bpe_apply −31% against bands re-measured the SAME DAY), so only a
 breach past the worst observed bias indicates a stale band rather than
 measurement-context noise; an unmargined floor re-flags the
 biggest-bias queries forever and loops the gate's reband step.
+
+A "status":"error" line (a query whose timed run failed, in either file)
+is a violation of its own: it prints ERROR <q> and exits 1. Its query is
+never banded or medianed — a time-to-failure is not a time.
 """
 import json, sys, glob
 
@@ -66,18 +70,25 @@ def newest(pattern, what):
 bench = argv[1] if len(argv) > 1 else newest("BENCH_LOCAL_r*.jsonl", "bench")
 bands = argv[2] if len(argv) > 2 else newest("SOLO_BANDS_r*.jsonl", "bands")
 
+errors = set()  # base query names with a failed timed run, in either file
 qs = {}  # base query name -> list of repeat times
 for line in open(bench):
     r = json.loads(line)
-    if "q" in r and not r["q"].startswith("_warm"):
+    if r.get("status") == "error":
+        errors.add(r["q"].split("#")[0])
+    elif "q" in r and not r["q"].startswith("_warm"):
         qs.setdefault(r["q"].split("#")[0], []).append(r["sec"])
+qs = {q: v for q, v in qs.items() if q not in errors}  # no partial medians
 
 bad, stale = 0, []
 for line in open(bands):
     b = json.loads(line)
+    if b.get("status") == "error":
+        errors.add(b["q"])
+        continue
     reps = qs.get(b["q"])
     if not reps:
-        if not stale_only:
+        if not stale_only and b["q"] not in errors:
             print(f"SKIP {b['q']}: not in {bench}")
         continue
     insec = sorted(reps)[len(reps) // 2]
@@ -100,6 +111,9 @@ if stale_only:
     print("\n".join(stale))
     sys.exit(0)
 
+for q in sorted(errors):
+    print(f"ERROR {q:26s} timed run failed (not banded)")
+
 # ---- suite-relative gate over the UNBANDED >1s tail ----------------------
 banded = {json.loads(l)["q"] for l in open(bands)}
 prevs = [f for f in sorted(glob.glob("BENCH_LOCAL_r*.jsonl")) if f != bench]
@@ -109,7 +123,7 @@ if prev_f:
     prev = {}
     for line in open(prev_f):
         r = json.loads(line)
-        if "q" in r and not r["q"].startswith("_warm"):
+        if "q" in r and not r["q"].startswith("_warm") and r.get("status") != "error":
             prev.setdefault(r["q"].split("#")[0], []).append(r["sec"])
     prev = {q: sorted(v)[len(v) // 2] for q, v in prev.items()}
     meds = {q: sorted(v)[len(v) // 2] for q, v in qs.items()}
@@ -132,5 +146,5 @@ else:
     print("\nno previous BENCH_LOCAL found — suite-relative gate skipped")
 
 print(f"\n{bad} violation(s), {rel_bad} relative violation(s), "
-      f"{len(stale)} stale band(s) — {bench} vs {bands}")
-sys.exit(1 if (bad or rel_bad) else (2 if stale else 0))
+      f"{len(errors)} error(s), {len(stale)} stale band(s) — {bench} vs {bands}")
+sys.exit(1 if (bad or rel_bad or errors) else (2 if stale else 0))

@@ -7,13 +7,15 @@
 #      — FIRST, on the quiet machine: the r10 drift adjudication
 #      (BASELINE.md) showed a bench run right after the test suite reads
 #      the whole query set ~8-15% hot, which is exactly the phantom-drift
-#      signature the bands exist to kill
+#      signature the bands exist to kill. Bench exits 1 when any query's
+#      timed run fails ("status":"error" line), and pipefail makes that
+#      fail the gate here
 #   2. sbt test green (570+ ScalaTest cases)
 #   3. band_check: no query's in-suite time breaches its committed solo
 #      band by >30% (tools/band_check.py, exit 1 on violation); STALE
 #      bands (in-suite median BELOW the band's solo floor — the query got
 #      faster after banding) are auto-refreshed via tools/reband.sh and
-#      the check re-run
+#      the check re-run; a "status":"error" line is a violation too
 #   4. stream_check: no streaming tag's rows/sec halved vs the previous
 #      round's committed STREAM_METRICS artifact
 #

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Solo per-query bench bands: one FRESH JVM per query (the judge's
 # adjudication method for suite-position noise), 5 repeats each via
-# graft.SoloBands. Appends one JSON line per query to OUT.
+# graft.SoloBands. Appends one JSON line per query to OUT. A query whose
+# timed run fails gets a "status":"error" line and SoloBands exits 1;
+# under pipefail that stops this script after appending that line.
 #
 # Usage: tools/solo_bands.sh OUT query [query ...]
 #   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)

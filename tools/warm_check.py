@@ -33,6 +33,8 @@ for line in open(path):
     if not line or '"q"' not in line:
         continue
     row = json.loads(line)
+    if row.get("status") == "error":
+        continue  # no time to count; band_check.py fails the run on it
     q, sec = row["q"], row["sec"]
     if q.startswith("_warm:"):
         if q != "_warm:io_preamble":
