@@ -39,6 +39,23 @@ object Bench {
     String.format(java.util.Locale.ROOT, pattern,
       args.map(_.asInstanceOf[AnyRef]): _*)
 
+  /** AQE's coalesce floor (`coalescePartitions.minPartitionSize`) in
+    * [[benchSession]], in bytes. A reduce partition below it is merged into
+    * a neighbour. Spark's 1 MB default put every shuffle under about 4 MB
+    * (all four of mr_books') on 1-2 of 4 cores, while their reduce tasks
+    * are CPU-bound (aggregation, collect_set, sort) and pay for a core from
+    * a few hundred KB up. Sweep of the mr_books jobs on local[4] (median of
+    * 16 passes in one JVM): 1583 ms at 1 MB, 1307 at 512 KB, 1300 at
+    * 384 KB, 1262 at 256 KB, 1290 at 128 KB, 1313 at 64 KB. At 256 KB those
+    * shuffles (1.6-3.8 MB) run 4 reduce tasks, with a 1.5x margin on the
+    * smallest. A word-count shuffle over 4 partitions then reduces on one
+    * task up to about 460 KB, on two from 550 to 920 KB, on four from
+    * 1.1 MB (at 1 MB: one task up to 1.46 MB). Inert at scale: there every
+    * partition is far above it. Which contiguous partitions merge changes
+    * neither per-key grouping nor sorted output.
+    */
+  private[graft] val CoalesceFloorBytes: Long = 256L * 1024
+
   /** The one session factory of every main and of perfbench, so bands,
     * plans and correctness run under exactly the benched settings. Callers
     * set their own log level.
@@ -47,6 +64,8 @@ object Bench {
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        CoalesceFloorBytes.toString)
       // Static conf, default 100: the inventory compiles far more than 100
       // generated classes, so the widest plans (the 128-column MinHash
       // signature aggregate) get evicted between their warmup and their

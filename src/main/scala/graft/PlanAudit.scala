@@ -155,6 +155,16 @@ object PlanAudit {
       p.subqueries.flatMap(walk)
   }
 
+  /** Row cap of a literal VALUES build side. A `LocalTableScan` holds its
+    * rows in the plan, so it is a literal unless a query re-embeds collected
+    * data; the cap tells the two apart at the audit's sf0.001. It sits above
+    * the largest literal table in the inventory, the 110-band DP lattice of
+    * `rel_dp_median` and `rel_dp_quantiles` (`PrivacyQueries.MedBandLo` to
+    * `MedBandHi`), and below the smallest fact table at sf0.001
+    * (`customer`, 150 rows), so a collected fact table still flags.
+    */
+  private val LiteralTableRows = 128
+
   /** Deliberately-reduced build side. The silent-creep danger this audit
     * exists for is a RAW-SCAN nested-loop build (Catalyst picking BNLJ for
     * a non-equi join over an unreduced table, or a broadcast() landing on
@@ -165,7 +175,7 @@ object PlanAudit {
     *    time, which is not the silent class this audit hunts), or
     *  - a literal-pinned filter (vec_id IN (...) / === literal — the
     *    broadcast-query-side pattern of the sim_ family), or
-    *  - a literal VALUES table.
+    *  - a literal VALUES table of at most [[LiteralTableRows]] rows.
     */
   private def tinySide(p: SparkPlan): Boolean = walk(p).exists {
     case _: HashAggregateExec | _: ObjectHashAggregateExec |
@@ -178,7 +188,7 @@ object PlanAudit {
     // LocalLimit as boundedness evidence.
     case _: org.apache.spark.sql.execution.GlobalLimitExec |
          _: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => true
-    case l: LocalTableScanExec => l.rows.size <= 100
+    case l: LocalTableScanExec => l.rows.size <= LiteralTableRows
     case f: org.apache.spark.sql.execution.FilterExec =>
       f.condition.exists {
         case _: org.apache.spark.sql.catalyst.expressions.In => true

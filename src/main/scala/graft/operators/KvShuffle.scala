@@ -31,22 +31,23 @@ import org.apache.spark.sql.functions._
   */
 object KvShuffle {
 
-  /** Reference partitioner: digits of each char's decimal code concatenated,
-    * mod `reducers`. Streaming Horner form of the reference's big-integer
-    * (appending digit d to a number n is n*10+d, and mod distributes), so
-    * the value matches for any key length without arbitrary precision.
+  /** Reference partitioner: digits of each code point's decimal code
+    * concatenated, mod `reducers`. Streaming Horner form of the reference's
+    * big-integer (appending the d-digit number c to n is n*10^d + c, and mod
+    * distributes), so the value matches for any key length without
+    * arbitrary precision or a String per character. Walks code points, not
+    * UTF-16 chars: Python's `ord` sees 😀 as 128512, not two surrogates.
     */
   def referencePartition(key: String, reducers: Int): Int = {
     var acc = 0L
     var i = 0
     while (i < key.length) {
-      val ord = key.charAt(i).toInt.toString
-      var j = 0
-      while (j < ord.length) {
-        acc = (acc * 10 + (ord.charAt(j) - '0')) % reducers
-        j += 1
-      }
-      i += 1
+      val cp = key.codePointAt(i)
+      var shift = 10L
+      while (shift <= cp) shift *= 10
+      // acc < reducers and shift <= 10^7 (max code point 1114111): no overflow
+      acc = (acc * shift + cp) % reducers
+      i += Character.charCount(cp)
     }
     acc.toInt
   }

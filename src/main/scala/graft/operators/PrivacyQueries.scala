@@ -720,8 +720,8 @@ object PrivacyQueries {
     val rows = customer.select(col("c_mktsegment").as("segment"),
       floor(col("c_acctbal") / 100).cast("bigint").as("band"))
     val segs = rows.groupBy("segment").agg(count(lit(1)).as("n"))
-    // literal local 110-row lattice (LocalTableScan — provably tiny to
-    // the PlanAudit nested-loop sweep, unlike a Range exec)
+    // literal local 110-row lattice (LocalTableScan, inside PlanAudit's
+    // LiteralTableRows cap for a nested-loop build, unlike a Range exec)
     val bands = spark.createDataset(MedBandLo to MedBandHi)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("band")
     val grid = segs.crossJoin(broadcast(bands))

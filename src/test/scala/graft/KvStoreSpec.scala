@@ -49,11 +49,15 @@ class KvStoreSpec extends AnyFunSuite {
   }
 
   test("referencePartition equals the reference's big-integer formula") {
-    // int(''.join(str(ord(c)) for c in x)) % reducers, via BigInt
+    // int(''.join(str(ord(c)) for c in x)) % reducers, via BigInt over
+    // code points (Python's ord), not UTF-16 chars
     def ref(key: String, reducers: Int): Int =
-      (BigInt(key.map(_.toInt.toString).mkString) mod BigInt(reducers)).toInt
+      (BigInt(key.codePoints.toArray.map(_.toString).mkString) mod BigInt(reducers)).toInt
+    // \u0001: a 1-digit code; € 8364; the BOM U+FEFF 65279, which starts
+    // every third mr_books file; 😀 U+1F600 128512, a surrogate pair in Java
     val words = Seq("a", "the", "zebra", "hash", "partition", "x1",
-      "longerwordwithmanychars", "Ab")
+      "longerwordwithmanychars", "Ab", "\u0001", "a\u0001b", "\u20AC", "10\u20AC",
+      "\uFEFFthe", "\uD83D\uDE00", "a\uD83D\uDE00b", "\uD83D\uDE00\uD83D\uDE00")
     for (w <- words; r <- Seq(2, 3, 8, 13))
       assert(KvShuffle.referencePartition(w, r) == ref(w, r), s"$w mod $r")
   }

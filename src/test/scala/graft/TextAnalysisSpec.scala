@@ -3,7 +3,7 @@ package graft
 import graft.operators.{MapReduce, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -119,6 +119,46 @@ class TextAnalysisSpec extends AnyFunSuite {
       metricOf[ShuffleExchangeExec](ran(MapReduce.wordCount(docs.toDS())), records),
       metricOf[GenerateExec](ran(TextAnalysis.invertedIndex(docs.toDF("doc_id", "text"))), "numOutputRows"))
     assert(got == ((pairs, pairs, pairs)))
+  }
+
+  /** Reduce partitions the final AQE plan of a ran single-shuffle Dataset
+    * reads: a coalescing read's specs, else all of the exchange's.
+    */
+  private def reducePartitions(ds: Dataset[_]): Int = {
+    val plan = ds.queryExecution.executedPlan
+    val stages = PlanWalk.collect(plan) { case s: ShuffleQueryStageExec => s.shuffle.numPartitions }
+    assert(stages.size == 1, plan)
+    PlanWalk.collect(plan) { case r: AQEShuffleReadExec => r.partitionSpecs.size }
+      .headOption.getOrElse(stages.head)
+  }
+
+  test("bench coalesce floor: a ~1.5 MB word-count shuffle reads 4 reduce partitions, a KB one 1") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val prev = spark.conf.getOption(key)
+    // one distinct hex word per row in 4 input partitions: the partial
+    // aggregate cannot combine, so each map task writes its rows' words
+    def wordCount(words: Long): Dataset[_] = {
+      val ds = TextAnalysis.wordCount(spark.range(0, words, 1, 4)
+        .select(substring(sha2(col("id").cast("string"), 256), 1, 16).as("text")))
+      ds.collect()
+      ds
+    }
+    def written(ds: Dataset[_]): Long = metricOf[ShuffleExchangeExec](ds, "shuffleBytesWritten")
+    try {
+      spark.conf.unset(key) // Spark's 1 MB default
+      val before = reducePartitions(wordCount(80000))
+      spark.conf.set(key, Bench.CoalesceFloorBytes.toString)
+      val big = wordCount(80000)
+      val small = wordCount(200)
+      assert(written(big) > 1200000L && written(big) < 1800000L, written(big))
+      assert(written(small) < 10000L, written(small))
+      assert(before < 4, "Spark's 1 MB default coalesces the same shuffle")
+      assert(reducePartitions(big) == 4)
+      assert(reducePartitions(small) == 1)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("word count total equals token count (conservation)") {
